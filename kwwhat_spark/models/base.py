@@ -2,9 +2,10 @@
 manifest (SURVEY §3.1).
 
 A *model* is a named function ``(Pipeline) -> DataFrame``. ``Pipeline``
-resolves ``ref()`` edges lazily with caching, so executing any mart pulls
-exactly its upstream subgraph — the topological order is implicit, like
-dbt's manifest DAG. Full-refresh semantics (every reference model's
+resolves ``ref()`` edges on first use and materializes every table
+model (see ``Pipeline.ref``), so executing any mart pulls exactly its
+upstream subgraph — the topological order is implicit, like dbt's
+manifest DAG. Full-refresh semantics (every reference model's
 ``is_incremental()=false`` branch); the incremental batch runner layers
 on top (kwwhat_spark/plans/incremental.py).
 """
@@ -22,7 +23,7 @@ from kwwhat_spark.config import VARS, PipelineVars
 MODELS: dict[str, Callable[["Pipeline"], DataFrame]] = {}
 
 # Reference materializations (dbt_project.yml:38-42 + per-model configs):
-# views stay lazy, everything else persists on first resolution.
+# views stay lazy, everything else is materialized on first resolution.
 VIEW_MODELS = {
     "stg_ocpp_logs",
     "stg_chargers",
@@ -43,7 +44,7 @@ def model(name: str):
 
 @dataclass
 class Pipeline:
-    """Execution context: sources + lazy model resolution.
+    """Execution context: sources + model resolution (see ``ref``).
 
     sources must provide: raw_ocpp_logs, raw_chargers, raw_ports,
     raw_connectors (schemas in FIXTURES.md §1).
@@ -59,10 +60,10 @@ class Pipeline:
     # Incremental mode: prior state per model ("{{ this }}"). A model runs
     # its is_incremental() branch iff its name is present here.
     this_dfs: dict[str, DataFrame] = field(default_factory=dict)
-    # View models to persist anyway. The staged log view is consumed by
-    # ~20 downstream models; caching it trades per-consumer scan pruning
-    # for reuse — a 38% full-build win on the demo seed, and the
-    # single-node analogue of materializing staging to Delta. Off by
+    # View models to materialize anyway, exactly like a table model. The
+    # staged log view feeds ~20 downstream models: materializing it parses
+    # the raw envelope once instead of once per consumer, at the price of
+    # the scan pruning each consumer would get from the lazy view. Off by
     # default (pure-lazy views, maximal pushdown).
     cache_views: tuple[str, ...] = ()
 
@@ -97,27 +98,43 @@ class Pipeline:
         return self.sources[name]
 
     def ref(self, name: str) -> DataFrame:
+        """Resolve a model. Table models (every model outside VIEW_MODELS,
+        plus ``cache_views``) are materialized like a dbt table: an eager
+        ``localCheckpoint`` stores the rows in executor block storage and
+        returns a frame whose plan is one ``LogicalRDD`` leaf. Downstream
+        models, BI queries and driver-side scalars then read the stored
+        rows; Catalyst never re-analyzes or re-plans the upstream SQL.
+        Views stay lazy and collapse into their consumers.
+
+        The trade: checkpoint blocks are not recomputable, so losing an
+        executor fails the job instead of recomputing the model — the
+        same trade the incremental state stores make. ``unpersist_all``
+        frees the blocks."""
         if name in self.overrides:
             return self.overrides[name]
         if name not in self._cache:
             df = MODELS[name](self)
-            # Non-view models are "materialized" (dbt tables / incremental
-            # tables): persist so downstream refs and driver-side scalar
-            # reads don't recompute the upstream subgraph. The reference's
-            # views (stg_*, fact_uptime, fact_charger_commissioned_daily)
-            # stay lazy and collapse into consumers.
-            if name not in VIEW_MODELS or name in self.cache_views:
-                df = df.persist()
+            if self.materializes(name):
+                df = df.localCheckpoint(eager=True)
             self._cache[name] = df
         return self._cache[name]
 
-    def unpersist_all(self) -> None:
-        for df in self._cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._cache.clear()
+    def materializes(self, name: str) -> bool:
+        """Whether ``ref(name)`` checkpoints the model (vs a lazy view)."""
+        return name not in VIEW_MODELS or name in self.cache_views
+
+    def unpersist_all(self, keep: tuple[str, ...] = ()) -> None:
+        """Free every model this Pipeline materialized, except those named
+        in ``keep``, and forget every resolved model not kept."""
+        from kwwhat_spark.operators.cachescope import release
+
+        for name in [n for n in self._cache if n not in keep]:
+            df = self._cache.pop(name)
+            if self.materializes(name):
+                try:
+                    release(df)
+                except Exception:  # session already stopped — nothing to free
+                    pass
 
     # ------------------------------------------------------------------
     # Batch-window computation (macros/incremental_date_range.sql).

@@ -20,6 +20,12 @@ Callers have two contracts:
 
 Tracking holds strong references: the JVM cache outlives the Python
 handle, so a weakref would go dead while the cache lives on.
+
+:func:`release` frees one handle whichever way it was materialized.
+``DataFrame.unpersist()`` only reaches the CacheManager, so on an
+eager ``localCheckpoint()`` it is a no-op: the checkpoint's blocks
+belong to the RDD under the frame's ``LogicalRDD`` leaf, and only
+unpersisting that RDD frees them.
 """
 
 from __future__ import annotations
@@ -35,13 +41,23 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def release(df: DataFrame, blocking: bool = False) -> None:
+    """Free what ``df`` holds: a ``persist()`` cache entry, or the blocks
+    of an eager ``localCheckpoint()``. A released checkpoint cannot be
+    read again."""
+    df.unpersist(blocking=blocking)
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(blocking)
+
+
 def release_tracked(blocking: bool = False) -> int:
-    """Unpersist every tracked intermediate; returns how many."""
+    """Release every tracked intermediate; returns how many."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
         try:
-            df.unpersist(blocking=blocking)
+            release(df, blocking=blocking)
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass

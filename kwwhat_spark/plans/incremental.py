@@ -23,6 +23,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from kwwhat_spark.models.base import MODELS, Pipeline
+from kwwhat_spark.operators.cachescope import release
 
 # Merge keys per incremental model (reference per-model `unique_key`).
 UNIQUE_KEYS: dict[str, list[str]] = {
@@ -182,6 +183,7 @@ class ParquetStateStore:
         # the same directory the lazy plan would still be scanning.
         out = transform(cur).localCheckpoint(eager=True)
         self.write(name, out, batch_id=self.last_batch_id(name))
+        release(out)
 
     def merge(self, name: str, new: DataFrame, keys: list[str], *,
               batch_id: int | None = None) -> None:
@@ -199,6 +201,7 @@ class ParquetStateStore:
         keep = existing.join(new.select(*keys).distinct(), keys, "left_anti")
         self.write(name, keep.unionByName(new.select(*existing.columns)),
                    batch_id=batch_id)
+        release(new)
 
 
 class PartitionedStateStore(ParquetStateStore):
@@ -339,6 +342,7 @@ class PartitionedStateStore(ParquetStateStore):
             merged = keep_all.unionByName(new.select(*evolved.columns))
             merged = merged.localCheckpoint(eager=True)
             self.write(name, merged, batch_id=batch_id)
+            release(merged)
             return
         # ONE materialization of the batch plan (VERDICT r8: the merge
         # previously ran it 2-3x — once for the affected-partition
@@ -354,7 +358,7 @@ class PartitionedStateStore(ParquetStateStore):
         # driver-safe to collect, and the ONLY state the merge reads.
         affected = [r["_part"] for r in newp.select("_part").distinct().collect()]
         if not affected:
-            newp.unpersist()
+            release(newp)
             return  # empty batch: no partitions touched, state unchanged
         non_null = [p for p in affected if p is not None]
         pred = F.col("_part").isin(non_null)
@@ -391,6 +395,7 @@ class PartitionedStateStore(ParquetStateStore):
             .partitionBy("_part")
             .parquet(path)
         )
+        release(newp)
         self._record_batch(name, batch_id)
 
 

@@ -22,3 +22,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def small_fleet_dir(tmp_path_factory):
+    """A small generated OCPP fleet (the property harness's generator,
+    8 chargers) for tests that need the model DAG without the demo seed."""
+    from tests.test_ocpp_dag_property import write_fleet
+
+    return write_fleet(tmp_path_factory.mktemp("small_fleet"), seed=7, n=8)

@@ -12,6 +12,7 @@ IncrementalRunner tests below.
 from __future__ import annotations
 
 import dataclasses
+import functools
 from pathlib import Path
 
 import pytest
@@ -31,8 +32,21 @@ from tests.dbt_unit_harness import (
 
 INTERMEDIATE = Path("/root/reference/models/intermediate/unit_tests.yml")
 MARTS = Path("/root/reference/models/marts/unit_tests.yml")
+_UNIT_YMLS = (INTERMEDIATE, MARTS)
+_MISSING_REASON = (
+    "dbt unit_tests.yml files absent; the replay needs the reference checkout"
+)
 
-ALL_TESTS = {t["name"]: t for t in load_unit_tests(INTERMEDIATE) + load_unit_tests(MARTS)}
+
+@functools.cache
+def _all_tests() -> dict[str, dict]:
+    """The reference's dbt unit tests by name, loaded on first use; empty
+    when the yml files are absent, so the rest of this module (the
+    runner convergence and store tests, and the helpers the fleet
+    property harness imports) still collects."""
+    if not all(p.exists() for p in _UNIT_YMLS):
+        return {}
+    return {t["name"]: t for p in _UNIT_YMLS for t in load_unit_tests(p)}
 
 # The reference disables this one upstream (marts/unit_tests.yml:1272-1273,
 # config.enabled: false) — and it IS broken as written: the new batch's
@@ -50,7 +64,7 @@ _ENABLED_ANYWAY = {"test_charge_attempt_incremental_merge_fills_stop_data"}
 
 INCREMENTAL_TESTS = sorted(
     name
-    for name, t in ALL_TESTS.items()
+    for name, t in _all_tests().items()
     if t.get("overrides", {}).get("macros", {}).get("is_incremental", False)
     and (
         t.get("config", {}).get("enabled", True) is not False
@@ -59,9 +73,13 @@ INCREMENTAL_TESTS = sorted(
 )
 
 
-@pytest.mark.parametrize("name", INCREMENTAL_TESTS)
+@pytest.mark.parametrize(
+    "name",
+    INCREMENTAL_TESTS
+    or [pytest.param(None, id="no-unit-tests", marks=pytest.mark.skip(reason=_MISSING_REASON))],
+)
 def test_dbt_incremental_unit(spark, name):
-    t = ALL_TESTS[name]
+    t = _all_tests()[name]
     overrides: dict = {}
     this_dfs: dict = {}
     lenient = name in _ENABLED_ANYWAY

@@ -217,12 +217,11 @@ def _charger_timeline(g: Gen, rng, connectors: list[int], tags: list):
     g.heartbeat()
 
 
-@pytest.fixture(scope="module", params=[20260814, 7, 424242])
-def fleet_dir(tmp_path_factory, request):
-    rng = random.Random(request.param)
-    out = tmp_path_factory.mktemp(f"ocpp_fleet_{request.param}")
+def write_fleet(out, seed: int, n: int = 24) -> str:
+    """Write a generated ``n``-charger fleet's four seed CSVs into the
+    directory ``out`` (a pathlib.Path); returns it as a string."""
+    rng = random.Random(seed)
     chargers, ports, connectors, logs = [], [], [], []
-    n = 24
     for i in range(n):
         ch = f"CH-P{i:03d}"
         loc = f"LOC-P{i // 3:02d}"
@@ -261,6 +260,11 @@ def fleet_dir(tmp_path_factory, request):
         w.writerow(["charge_point_id", "port_id", "connector_id", "connector_type"])
         w.writerows(connectors)
     return str(out)
+
+
+@pytest.fixture(scope="module", params=[20260814, 7, 424242])
+def fleet_dir(tmp_path_factory, request):
+    return write_fleet(tmp_path_factory.mktemp(f"ocpp_fleet_{request.param}"), request.param)
 
 
 @pytest.mark.parametrize("mart", _MART_NAMES)

@@ -109,3 +109,35 @@ def test_no_nested_loop_plans(spark, sf_dir, name):
     if name in WHITELIST:
         return  # documented exception — reason in WHITELIST
     assert not flagged, f"{name} plans {flagged}; whitelist it only with a scale rationale"
+
+
+def test_downstream_model_reads_upstream_tables_as_checkpoints(spark, small_fleet_dir):
+    # Pipeline.ref materializes table models as lineage-cut checkpoints
+    # (the Spark form of a dbt table): a downstream model's plan starts
+    # from one LogicalRDD leaf per upstream table, never from the
+    # upstream SQL. Reverting ref to persist() re-inlines that SQL under
+    # an InMemoryRelation and fails here.
+    import kwwhat_spark.models  # noqa: F401  (registers the model DAG)
+    from kwwhat_spark.models.base import MODELS, Pipeline
+    from kwwhat_spark.sources.ocpp import load_ocpp_sources
+
+    pipe = Pipeline(
+        spark=spark,
+        sources=load_ocpp_sources(spark, small_fleet_dir),
+        cache_views=("stg_ocpp_logs",),
+    )
+    try:
+        upstream = ("fact_charge_attempts", "dim_connectors", "dim_chargers")
+        want = set()
+        for name in upstream:
+            plan = pipe.ref(name)._jdf.queryExecution().analyzed()
+            assert plan.nodeName() == "LogicalRDD", (name, plan.nodeName())
+            want.add(plan.rdd().id())
+        qe = MODELS["fact_visits"](pipe)._jdf.queryExecution()
+        leaves = qe.analyzed().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        assert {leaf.nodeName() for leaf in leaves} == {"LogicalRDD"}
+        assert {leaf.rdd().id() for leaf in leaves} == want
+        assert "InMemoryRelation" not in qe.withCachedData().toString()
+    finally:
+        pipe.unpersist_all()
